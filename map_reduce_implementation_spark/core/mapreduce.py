@@ -8,21 +8,30 @@ The reference's public contract (mapreduce.h:14-32) is:
 where ``map_func(DATA_SPLIT*, fd_out)`` consumes one line-aligned split and
 writes output lines, and ``reduce_func(fds[], n, fd_out)`` consumes ALL
 intermediate outputs at once (gang reduce — grouping is the UDF's job,
-mapreduce.c:165). The faithful Spark analogue:
+mapreduce.c:165). The Spark analogue:
 
-- one split            → one RDD partition (line-aligned, built-in)
-- map_func             → ``mapPartitions`` (partition-in, iterator-out)
-- intermediate files   → implicit Spark shuffle (never materialized by us)
-- single gang reducer  → ``coalesce(1).mapPartitions`` (numPartitions=1)
+- one split            → one RDD partition (line-aligned, built-in), one
+                         map task; the ``split_num`` map tasks run in
+                         parallel
+- map_func             → ``mapPartitionsWithIndex``, each output line keyed
+                         by (split index, position in the split)
+- intermediate files   → a Spark shuffle into one partition, sorted by
+                         that key (``repartitionAndSortWithinPartitions``)
+- single gang reducer  → one reduce task that strips the keys and hands
+                         ``reduce_func`` the bare lines
 - usr_data             → closure capture
+
+The sort makes ``reduce_func`` see the map outputs in split order, the
+order in which mapreduce.c:165 concatenates its intermediate files. The
+order comes from the keys, not from the order in which the reduce task
+happens to fetch shuffle blocks.
 
 This module exists for API parity and for genuinely imperative
 per-partition logic. Declarative pipelines (jobs/, operators/) are the
 recommended path — Catalyst cannot see inside these Python functions, so
-nothing here is optimized, and at 100 TB the single-partition reduce is a
+nothing here is optimized, and at 100 TB the single reduce task is a
 deliberate bottleneck exactly like the reference's lone reduce worker
-(mapreduce.c:159-171). ``run_mapreduce`` therefore also accepts
-``reduce_parallelism > 1`` when the reduce function is key-partitionable.
+(mapreduce.c:159-171).
 """
 
 from __future__ import annotations
@@ -31,7 +40,7 @@ import time
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 MapFunc = Callable[[Iterator[str], object], Iterable[str]]
 ReduceFunc = Callable[[Iterator[str], object], Iterable[str]]
@@ -46,7 +55,6 @@ class MapReduceSpec:
     map_func: MapFunc
     reduce_func: ReduceFunc
     usr_data: object = None
-    reduce_parallelism: int = 1
     # API parity with the reference's unlinked mapreduce2.c variant
     # (mapreduce2.c:135-196): there, map-worker 0 stays alive after its
     # map and becomes the reducer, blocking on a pipe until the parent
@@ -75,7 +83,6 @@ class MapReduceResult:
     filepath: str | None
     processing_time_us: int
     map_partitions: int
-    reduce_partitions: int
     lines: list[str] = field(default_factory=list)
 
 
@@ -86,20 +93,31 @@ def run_mapreduce(
 ) -> MapReduceResult:
     """Execute the two-phase map/reduce lifecycle (mapreduce.c:99-191).
 
-    Unlike the reference, map tasks run in parallel (the reference
+    The map phase runs as one task per split, in parallel (the reference
     ``waitpid``s inside its fork loop, mapreduce.c:136 — its main
-    performance defect, deliberately not reproduced).
+    performance defect, deliberately not reproduced). Every map output
+    line is keyed by (split index, position in the split) and shuffled
+    into a single partition sorted by that key, so exactly one reduce
+    task calls ``reduce_func`` once, on the bare lines in split order.
     """
     t0 = time.monotonic_ns()
     sc = spark.sparkContext
     usr_data = spec.usr_data
     map_func, reduce_func = spec.map_func, spec.reduce_func
 
+    def keyed_map(split: int, it: Iterator[str]) -> Iterator[tuple[tuple[int, int], str]]:
+        for pos, line in enumerate(map_func(it, usr_data)):
+            yield (split, pos), line
+
+    def bare_reduce(it: Iterator[tuple[tuple[int, int], str]]) -> Iterable[str]:
+        return reduce_func((line for _, line in it), usr_data)
+
     rdd = sc.textFile(spec.input_data_filepath, minPartitions=spec.split_num)
-    mapped = rdd.mapPartitions(lambda it: map_func(it, usr_data))
-    n_map = mapped.getNumPartitions()
-    reduced = mapped.coalesce(spec.reduce_parallelism).mapPartitions(
-        lambda it: reduce_func(it, usr_data)
+    n_map = rdd.getNumPartitions()
+    reduced = (
+        rdd.mapPartitionsWithIndex(keyed_map)
+        .repartitionAndSortWithinPartitions(1, lambda _: 0)
+        .mapPartitions(bare_reduce)
     )
 
     if output_path:
@@ -114,7 +132,6 @@ def run_mapreduce(
         filepath=output_path,
         processing_time_us=(t1 - t0) // 1000,
         map_partitions=n_map,
-        reduce_partitions=spec.reduce_parallelism,
         lines=lines,
     )
 
@@ -177,8 +194,3 @@ def word_finder_map(lines: Iterator[str], usr_data: object) -> Iterator[str]:
 def identity_reduce(lines: Iterator[str], usr_data: object) -> Iterator[str]:
     """Concatenating reduce (usr_functions.c:205-238)."""
     yield from lines
-
-
-def to_dataframe(spark: SparkSession, result: MapReduceResult) -> DataFrame:
-    """Lift a collected result into a DataFrame[value: string]."""
-    return spark.createDataFrame([(ln,) for ln in result.lines], "value: string")

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import glob
+import os
+import random
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,6 +18,7 @@ from map_reduce_implementation_spark.core.mapreduce import (
     run_mapreduce,
     word_finder_map,
 )
+from map_reduce_implementation_spark.jobs.word_finder import word_finder_python
 
 from .conftest import REF_CORPUS_DIR
 
@@ -103,3 +109,76 @@ def test_overlap_variant_results_identical(spark):
     b = run_mapreduce(spark, over)
     assert a.lines == b.lines and len(a.lines) == 26
     assert b.map_partitions == a.map_partitions
+
+
+# ---------------------------------------------------------------------------
+# Reference-independent checks on a generated corpus
+# ---------------------------------------------------------------------------
+
+_VOCAB = ["the", "The", "THE", "theme", "other", "the_", "9the", "x-the",
+          "Alice", "rabbit", "caf\u00e9", "stra\u00dfe", "42", "", "--"]
+
+
+def _write_corpus(tmp_path):
+    """A seeded 2,000-line corpus with non-ASCII letters and ``the`` next
+    to letters, digits, ``_`` and ``-``; returns its path and its lines."""
+    rng = random.Random(5)
+    lines = [" ".join(rng.choice(_VOCAB) for _ in range(rng.randint(0, 10)))
+             for _ in range(2000)]
+    path = tmp_path / "corpus.txt"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    return str(path), lines
+
+
+@pytest.mark.parametrize("split_num", [1, 3, 8])
+def test_counter_lines_equal_python_ascii_count(spark, tmp_path, split_num):
+    path, lines = _write_corpus(tmp_path)
+    want = [0] * 26
+    for line in lines:
+        for ch in line:
+            if "a" <= ch <= "z" or "A" <= ch <= "Z":
+                want[ord(ch.upper()) - 65] += 1
+    spec = MapReduceSpec(path, split_num, letter_counter_map, letter_counter_reduce)
+    result = run_mapreduce(spark, spec)
+    assert result.map_partitions == split_num
+    assert result.lines == [f"{chr(65 + i)} {c}" for i, c in enumerate(want)]
+
+
+def test_word_finder_lines_in_file_order(spark, tmp_path):
+    path, lines = _write_corpus(tmp_path)
+    spec = MapReduceSpec(path, 8, word_finder_map, identity_reduce, usr_data="the")
+    result = run_mapreduce(spark, spec)
+    want = word_finder_python(lines, "the")
+    assert len(want) > 100
+    assert result.lines == want
+
+
+def test_map_stage_runs_split_num_tasks_into_one_reducer(spark, tmp_path):
+    path, _ = _write_corpus(tmp_path)
+    sc = spark.sparkContext
+    group = "test-run-mapreduce-stages"
+    sc.setJobGroup(group, "run_mapreduce stage shape")
+    try:
+        run_mapreduce(spark, MapReduceSpec(path, 8, letter_counter_map, letter_counter_reduce))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    stage_ids = sorted(tracker.getJobInfo(jobs[0]).stageIds)
+    # the map stage precedes the reduce stage it feeds
+    assert [tracker.getStageInfo(s).numTasks for s in stage_ids] == [8, 1]
+
+
+def test_output_path_writes_one_part_file(spark, tmp_path):
+    path, _ = _write_corpus(tmp_path)
+    spec = MapReduceSpec(path, 8, word_finder_map, identity_reduce, usr_data="the")
+    out = str(tmp_path / "out")
+    written = run_mapreduce(spark, spec, output_path=out)
+    assert written.filepath == out and written.lines == []
+    parts = glob.glob(os.path.join(out, "part-*"))
+    assert len(parts) == 1
+    with open(parts[0], encoding="utf-8") as f:
+        got = f.read().split("\n")[:-1]
+    assert got == run_mapreduce(spark, spec).lines
