@@ -87,6 +87,33 @@ def _np_murmur3_long(x, h1):
     return (h1 ^ (h1 >> np.uint32(16))).astype(np.uint32)
 
 
+def _group_fold(doc, mat, ufunc):
+    """(distinct doc ids, per-doc fold of ``mat`` rows) via a stable sort
+    plus ``ufunc.reduceat`` — one output row per distinct doc. The Arrow
+    kernels use it per batch and again over the batch partials."""
+    import numpy as np
+
+    order = np.argsort(doc, kind="stable")
+    d_s = doc[order]
+    starts = np.flatnonzero(np.r_[True, d_s[1:] != d_s[:-1]])
+    return d_s[starts], ufunc.reduceat(mat[order], starts, axis=0)
+
+
+def _fixed_width_list(mat):
+    """``pa.ListArray`` with one ``mat.shape[1]``-wide list per row of the
+    2-D array ``mat``. Arrow ``list`` offsets are int32, so a matrix
+    whose ``(n + 1) * width`` passes the int32 maximum raises
+    ``ValueError`` before anything is allocated instead of wrapping."""
+    import numpy as np
+    import pyarrow as pa
+
+    n, width = mat.shape
+    if (n + 1) * width > np.iinfo(np.int32).max:
+        raise ValueError(f"{n} lists of {width} values overflow int32 list offsets")
+    offsets = np.arange(0, (n + 1) * width, width, dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(mat.ravel()))
+
+
 def minhash_signatures_arrow(
     shingles: DataFrame, num_perm: int = 128, bands: int | None = None
 ) -> DataFrame:
@@ -118,8 +145,8 @@ def minhash_signatures_arrow(
     import numpy as np
     import pyarrow as pa
 
-    if bands is not None and num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
+    if bands is not None and (bands <= 0 or num_perm % bands):
+        raise ValueError(f"bands must be a positive divisor of num_perm, got {bands}")
     rows_per_band = num_perm // bands if bands else 0
 
     mask = F.lit(0xFFFFFFFF)
@@ -133,14 +160,6 @@ def minhash_signatures_arrow(
         ", bands array<int>" if bands else ""
     )
 
-    def _group_minima(doc, perms):
-        """(doc ids, per-doc minima) via sort + reduceat — one group
-        row per distinct doc, min over the group's permutation rows."""
-        order = np.argsort(doc, kind="stable")
-        d_s = doc[order]
-        starts = np.flatnonzero(np.r_[True, d_s[1:] != d_s[:-1]])
-        return d_s[starts], np.minimum.reduceat(perms[order], starts, axis=0)
-
     def part_minima(it):
         P = np.arange(num_perm, dtype=np.int64)
         docs_parts: list[np.ndarray] = []
@@ -152,24 +171,16 @@ def minhash_signatures_arrow(
             h1 = batch.column(1).to_numpy(zero_copy_only=False)
             h2 = batch.column(2).to_numpy(zero_copy_only=False)
             perms = (h1[:, None] + P[None, :] * h2[:, None]) & 0xFFFFFFFF
-            d, m = _group_minima(doc, perms)
+            d, m = _group_fold(doc, perms, np.minimum)
             docs_parts.append(d)
             mins_parts.append(m)
         if not docs_parts:
             return
-        doc_all, mins_all = _group_minima(
-            np.concatenate(docs_parts), np.vstack(mins_parts)
+        doc_all, mins_all = _group_fold(
+            np.concatenate(docs_parts), np.vstack(mins_parts), np.minimum
         )
         n = len(doc_all)
-        arrays = [
-            pa.array(doc_all),
-            pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32)
-                ),
-                pa.array(mins_all.ravel()),
-            ),
-        ]
+        arrays = [pa.array(doc_all), _fixed_width_list(mins_all)]
         names = ["doc_id", "sig"]
         if bands:
             vals = mins_all.view(np.uint64)
@@ -179,14 +190,7 @@ def minhash_signatures_arrow(
                 for j in range(rows_per_band):
                     h = _np_murmur3_long(vals[:, b * rows_per_band + j], h)
                 buckets[:, b] = h
-            arrays.append(
-                pa.ListArray.from_arrays(
-                    pa.array(
-                        np.arange(0, (n + 1) * bands, bands, dtype=np.int32)
-                    ),
-                    pa.array(buckets.view(np.int32).ravel()),
-                )
-            )
+            arrays.append(_fixed_width_list(buckets.view(np.int32)))
             names.append("bands")
         yield pa.RecordBatch.from_arrays(arrays, names)
 
@@ -222,8 +226,7 @@ def minhash_lsh_pairs(
     narrow banding). At 100 TB the exchange volume dominates, so the
     narrow shape wins despite the extra local joins.
     """
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
+    # minhash_signatures_arrow validates ``bands`` before building anything
     sig = minhash_signatures_arrow(shingles, num_perm, bands=bands).cache()
 
     # band bucket = murmur3 over the band's signature slice hashed AS AN
@@ -473,7 +476,8 @@ def simhash_arrow(
     vectorized in numpy instead of a 64-way posexplode — the explode
     multiplies the shuffle by 64 (measured 4.6 s at sf0.1 vs ~0.9 s
     here). Token hashing stays JVM-side; one shuffle partitions by doc;
-    per-batch ±1 bit matrices fold via pandas groupby-sum.
+    per-batch ±1 bit matrices fold via :func:`_group_fold` (sort +
+    ``np.add.reduceat``).
     """
     import numpy as np
     import pyarrow as pa
@@ -486,15 +490,6 @@ def simhash_arrow(
     ).select("doc_id", F.xxhash64("tok").alias("h"))
     part = toks.repartition("doc_id")
 
-    def _group_sums(doc, bits):
-        """(doc ids, per-doc vote sums) via sort + reduceat (round 13 —
-        same rewrite as the minhash kernel: the per-batch pandas frame
-        + groupby allocated and sorted the 65k×65 matrix twice)."""
-        order = np.argsort(doc, kind="stable")
-        d_s = doc[order]
-        starts = np.flatnonzero(np.r_[True, d_s[1:] != d_s[:-1]])
-        return d_s[starts], np.add.reduceat(bits[order], starts, axis=0)
-
     def fold(it):
         shifts = np.arange(64, dtype=np.uint64)
         docs_parts: list[np.ndarray] = []
@@ -505,13 +500,13 @@ def simhash_arrow(
             doc = batch.column(0).to_numpy(zero_copy_only=False)
             h = batch.column(1).to_numpy(zero_copy_only=False).view(np.uint64)
             bits = (((h[:, None] >> shifts[None, :]) & 1).astype(np.int64) * 2) - 1
-            d, s = _group_sums(doc, bits)
+            d, s = _group_fold(doc, bits, np.add)
             docs_parts.append(d)
             sums_parts.append(s)
         if not docs_parts:
             return
-        doc_all, sums = _group_sums(
-            np.concatenate(docs_parts), np.vstack(sums_parts)
+        doc_all, sums = _group_fold(
+            np.concatenate(docs_parts), np.vstack(sums_parts), np.add
         )
         pos = (sums > 0).astype(np.uint64)
         fp = (pos * (np.uint64(1) << shifts)).sum(axis=1, dtype=np.uint64).view(np.int64)

@@ -116,11 +116,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    """Line-oriented text source (the reference's only source, S1/S2)."""
-    return spark.read.text(path)
-
-
 def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
     return spark.read.options(header="true", inferSchema="true", **options).csv(path)
 

@@ -60,7 +60,6 @@ def revenue_expr() -> Column:
 
 
 # SQL fragments mirroring the helpers above (keep in lockstep!)
-SQL_DEC = "CAST({col} AS DECIMAL(18,{scale}))"
 SQL_REVENUE = (
     "CAST(l_extendedprice AS DECIMAL(18,2))"
     " * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"

@@ -515,3 +515,52 @@ def test_minhash_arrow_bands_match_jvm_hash(spark):
         ).collect()
     }
     assert {d: b for d, (_, b) in arrow.items()} == jvm_bands
+
+
+@pytest.mark.parametrize("bands", [0, -4])
+def test_nonpositive_bands_raise_value_error_at_call_time(spark, bands):
+    """``bands <= 0`` is rejected while the plan is built — not as a
+    ``ZeroDivisionError`` from ``num_perm % 0``, and not (``-4`` divides
+    128) inside a Python worker."""
+    from map_reduce_implementation_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures_arrow,
+    )
+
+    sh = spark.createDataFrame([(1, "abcde")], "doc_id long, shingle string")
+    with pytest.raises(ValueError, match="bands"):
+        minhash_signatures_arrow(sh, 128, bands=bands)
+    with pytest.raises(ValueError, match="bands"):
+        minhash_lsh_pairs(sh, 128, bands=bands)
+
+
+def test_fixed_width_list_rejects_int32_offset_overflow():
+    """2**24 lists of 128 values put the last offset at 2**31: the guard
+    raises before allocating (the input is a zero-stride view)."""
+    import numpy as np
+
+    from map_reduce_implementation_spark.operators.dedup import _fixed_width_list
+
+    huge = np.broadcast_to(np.zeros(1, np.int64), (2**24, 128))
+    with pytest.raises(ValueError, match="int32"):
+        _fixed_width_list(huge)
+
+
+def test_fixed_width_list_matches_explicit_offsets():
+    import numpy as np
+    import pyarrow as pa
+
+    from map_reduce_implementation_spark.operators.dedup import _fixed_width_list
+
+    for mat in (
+        np.arange(12, dtype=np.int64).reshape(4, 3),
+        np.arange(8, dtype=np.uint32).reshape(2, 4).view(np.int32),
+        np.empty((0, 5), dtype=np.int64),
+    ):
+        n, width = mat.shape
+        want = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int32)),
+            pa.array(mat.ravel()),
+        )
+        got = _fixed_width_list(mat)
+        assert got.type == want.type and got.equals(want)

@@ -130,14 +130,19 @@ def _write_corpus(tmp_path):
     return str(path), lines
 
 
-@pytest.mark.parametrize("split_num", [1, 3, 8])
-def test_counter_lines_equal_python_ascii_count(spark, tmp_path, split_num):
-    path, lines = _write_corpus(tmp_path)
-    want = [0] * 26
+def _ascii_letter_counts(lines):
+    counts = [0] * 26
     for line in lines:
         for ch in line:
             if "a" <= ch <= "z" or "A" <= ch <= "Z":
-                want[ord(ch.upper()) - 65] += 1
+                counts[ord(ch.upper()) - 65] += 1
+    return counts
+
+
+@pytest.mark.parametrize("split_num", [1, 3, 8])
+def test_counter_lines_equal_python_ascii_count(spark, tmp_path, split_num):
+    path, lines = _write_corpus(tmp_path)
+    want = _ascii_letter_counts(lines)
     spec = MapReduceSpec(path, split_num, letter_counter_map, letter_counter_reduce)
     result = run_mapreduce(spark, spec)
     assert result.map_partitions == split_num
@@ -182,3 +187,25 @@ def test_output_path_writes_one_part_file(spark, tmp_path):
     with open(parts[0], encoding="utf-8") as f:
         got = f.read().split("\n")[:-1]
     assert got == run_mapreduce(spark, spec).lines
+
+
+@pytest.mark.parametrize("min_partitions", [None, 1, 3, 8])
+def test_letter_counter_job_equals_python_ascii_count(spark, tmp_path, min_partitions):
+    from map_reduce_implementation_spark.jobs import letter_counter
+
+    path, lines = _write_corpus(tmp_path)
+    df = letter_counter(spark, path, min_partitions=min_partitions)
+    got = [(r.letter, r.cnt) for r in df.collect()]
+    assert got == [(chr(65 + i), c) for i, c in enumerate(_ascii_letter_counts(lines))]
+
+
+@pytest.mark.parametrize("word", ["the", "Alice", "42", "caf", "stra"])
+def test_word_finder_job_equals_python_oracle(spark, tmp_path, word):
+    """Words next to ``_``, digits, ``-`` and non-ASCII letters: only
+    ``[0-9A-Za-z]`` neighbours block a match."""
+    from map_reduce_implementation_spark.jobs import word_finder
+
+    path, lines = _write_corpus(tmp_path)
+    want = word_finder_python(lines, word)
+    assert want
+    assert [r.value for r in word_finder(spark, path, word).collect()] == want

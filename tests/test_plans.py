@@ -111,3 +111,13 @@ def test_runtime_bloom_filter_injected(spark):
         assert got == want and len(got) > 0
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def test_dump_plans_uses_the_tools_package_scan_audit():
+    """The plan formatter is imported at module load from the ``tools``
+    package, so a missing module fails loudly instead of being written
+    into every plan file as an ``ERROR:`` line."""
+    import tools.dump_plans
+    import tools.scan_audit
+
+    assert tools.dump_plans.formatted_plan is tools.scan_audit.formatted_plan
